@@ -1,14 +1,15 @@
 """Extraction benchmark: one seeded workload per call.
 
-    python3 perfbench/run.py --workload ocr_docs --seed 1 --seconds 10 \\
+    python3 perfbench/run.py --workload ocr_docs --seed 1 --seconds 1 \\
         --trace 0
 
 Run from the repository root.  Per run: build (or reuse) the seeded
-inputs and golden, set up a ``local[nproc]`` session twice, make one
-untimed first job call, then call the job in a closed loop (one
-client, next call after the previous returns) for ``--seconds`` of job
-time, checking every call's committed output against the golden.
-``--trace 1`` instead makes one untraced and one traced job call,
+inputs and golden, set up a ``local[nproc]`` session once, from a
+fresh JVM, then call the job in a closed loop (one client, next call
+after the previous returns) for ``--seconds`` of job time, checking
+every call's committed output against the golden.  BENCHMARK.json sets
+``--seconds 1``, so a run is one job launch: set-up and one call.
+``--trace 1`` instead makes a first, an untraced and a traced job call,
 forces single layers through ``noop`` sinks and times the per-image
 layers in-process, to explain where the job's time goes.  See
 perfbench/README.md.
@@ -34,7 +35,6 @@ from rss import descendants
 
 ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".perfbench_work")
-SETUPS = 2                # set-ups per run; setup_s is their median
 DRIVER_MEM = "3g"         # fits a 15 GB host; the session default is 48g
 IMAGE_SAMPLE = 24         # images timed per-layer in the traced run
 
@@ -89,13 +89,11 @@ class Bench:
         """get_spark plus one warm-up task on the tiny input: the job's
         heaviest operator through a noop sink, which starts the Python
         workers and loads their weights (OCR) -> (get_spark seconds,
-        set-up seconds).  A later set-up stops the session first and
-        starts a new one in the same JVM."""
+        set-up seconds).  Called once per run, so it launches the JVM
+        as a job launch does."""
         from ocr_pytorch_spark.operators import dedup, extract as X
         from ocr_pytorch_spark.sources import session
 
-        if self.spark is not None:
-            self.spark.stop()
         t0 = time.perf_counter()
         self.spark = session.get_spark(app=f"perfbench-{self.name}")
         t1 = time.perf_counter()
@@ -190,21 +188,22 @@ def _m(value: float, unit: str) -> dict:
 
 
 def run_untraced(b: Bench, seconds: float, context: dict) -> dict:
-    setups = [b.setup()[1] for _ in range(SETUPS)]
-    # the first full-size call after set-up also pays the JVM's first
-    # pass over the commit path (4-7 s, varying from run to run): it is
-    # checked but reported only as context
-    first_s = b.timed_call()[0]
+    # one cold set-up: a second one in the same process would reuse the
+    # JVM, and a fresh JVM per set-up costs more than the run can spend
+    get_spark_s, setup_s = b.setup()
+    # the first call pays the JVM's first pass over the job's full-size
+    # plans, as the one call of a job launch does; calls after it run
+    # warm and would pull the median down, so keep --seconds below one
+    # call to time launches alone
     times: list[float] = []
     while sum(times) < seconds or not times:
         times.append(b.timed_call()[0])
     job_s = statistics.median(times)
-    context.update(setups_s=setups, first_call_s=first_s,
-                   job_calls_s=times)
+    context.update(get_spark_s=get_spark_s, job_calls_s=times)
     docs = b.inp["meta"]["docs"]
     return {"job_s": _m(job_s, "s"),
             "docs_per_s": _m(docs / job_s, "1/s"),
-            "setup_s": _m(statistics.median(setups), "s")}
+            "setup_s": _m(setup_s, "s")}
 
 
 def main() -> int:

@@ -8,10 +8,10 @@ a timing.
 * ``ocr_docs``: ``datagen.gen_document`` documents + their images; the
   golden is ``oracle.extract_document`` with ``ocr_for_ref``, so every
   distinct image is OCR'd once (spread over a spawn pool).
-* ``corpus_clean``: a seeded text corpus with near-duplicate clusters;
-  the golden composes the DuckDB stage oracles of
-  ``__spark_entry__.oracle_sql()`` (``dedup_components``,
-  ``text_quality``, ``corpus_filter``).
+* ``corpus_clean``: a seeded text corpus shaped like the reference
+  corpus, near-duplicates included (``gen_corpus``); the golden
+  composes the DuckDB stage oracles of ``__spark_entry__.oracle_sql()``
+  (``dedup_components``, ``text_quality``, ``corpus_filter``).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import numpy as np
 # images on every seed, so seeds change content but not load
 OCR_DOCS = 24
 OCR_IMAGES = 36
-CORPUS_DOCS = 600
+CORPUS_DOCS = 5000  # the reference corpus size
 TINY_OCR_DOCS = 2
 TINY_CORPUS_DOCS = 40
 
@@ -66,20 +66,26 @@ def _pool_init(seed: int) -> None:
 
 
 def _ocr_ref(ref: str):
-    """-> (ref, [(box_order, text)...] or None when ocr_image raises)."""
+    """-> (ref, ([(box_order, text)...] or None when ocr_image raises,
+    seconds in ocr_image))."""
+    import time
+
     from ocr_pytorch_spark import datagen, oracle
 
     img, _ = datagen.gen_image_array(ref, _POOL_STATE["seed"])
     ctpn_w, crnn_w = _POOL_STATE["w"]
+    t0 = time.perf_counter()
     try:
         pairs = oracle.ocr_image(img, ctpn_w, crnn_w, _POOL_STATE["cfg"])
     except Exception:  # the job emits an ERROR_BOX_ORDER row instead
-        return ref, None
-    return ref, [(int(o), t) for o, t in pairs]
+        return ref, (None, time.perf_counter() - t0)
+    return ref, ([(int(o), t) for o, t in pairs],
+                 time.perf_counter() - t0)
 
 
 def ocr_for_refs(refs: list[str], seed: int) -> dict:
-    """OCR each ref once, over ``nproc`` spawned workers."""
+    """OCR each ref once, over ``nproc`` spawned single-thread workers
+    (the job's parallelism) -> {ref: (pairs or None, seconds)}."""
     ctx = multiprocessing.get_context("spawn")
     with ctx.Pool(min(_nproc(), max(1, len(refs))), _pool_init,
                   (seed,)) as pool:
@@ -126,12 +132,11 @@ def _build_ocr(out: str, n_docs: int, seed: int, with_golden: bool):
                                for d in docs for s in d["spans"])}
     if with_golden:
         by_ref = ocr_for_refs(refs, seed)
-        meta["error_images"] = sum(v is None for v in by_ref.values())
         golden = {}
         for d in docs:
             g = oracle.extract_document(
                 d, None, None, None, None,
-                ocr_for_ref=lambda r: by_ref[r] or [])
+                ocr_for_ref=lambda r: by_ref[r][0] or [])
             golden[d["doc_id"]] = [[s["kind"], s["text"], s["media_ref"],
                                     s["offset"]] for s in g["spans"]]
         with open(os.path.join(out, "golden.json"), "w") as f:
@@ -156,53 +161,77 @@ def check_ocr(dst: str, golden: dict) -> int:
 
 # --- corpus_clean -----------------------------------------------------
 
-_STOPWORDS = ("the", "a", "of", "and", "to")
-_SYLLABLES = ("ka", "lo", "mi", "ne", "ru", "ta", "vo", "shi", "pe",
-              "dra", "gu", "zen", "bri", "ost", "el", "quin")
+# Measured on the repo's reference corpus (sf0.1 documents.parquet,
+# 5000 rows): 30 words drawn uniformly (two of them stopwords), 10-100
+# words per document (uniform), 5% of documents are another document's
+# text plus " dup" (originals drawn with replacement), lang independent
+# of the text (en 41%, zh/es/fr/de 14-15% each), source = src{i % 20}.
+_VOCAB = ("agg", "batch", "big", "column", "customer", "data", "fast",
+          "filter", "group", "hash", "join", "key", "line", "merge",
+          "order", "part", "query", "row", "scan", "slow", "small",
+          "sort", "spark", "stream", "table", "value", "vector",
+          "window", "the", "a")
+# label-propagation rounds dedup.dup_components needs on the reference
+# corpus; a generated corpus needing another count is redrawn
+REF_ROUNDS = 3
+MAX_DRAWS = 20
+_LANGS = ("en", "zh", "es", "fr", "de")
+_LANG_P = (0.41, 0.1475, 0.1475, 0.1475, 0.1475)
 
 
-def _vocabulary() -> list[str]:
-    # ~4k distinct content words: a small vocabulary makes unrelated
-    # documents share word trigrams, which would chain LSH candidates
-    # into corpus-wide components
-    s = _SYLLABLES
-    return sorted({a + b + c for a in s for b in s for c in s}
-                  | {a + b for a in s for b in s})
+def gen_corpus(n_docs: int, seed: int, draw: int = 0) -> list[dict]:
+    """Documents (doc_id, text, lang, source, n_chars) shaped like the
+    reference corpus.  At its 5000 rows this reproduces its dedup graph:
+    ~4550 components, 15-16% of documents in multi-document components,
+    the largest of 9-16 documents."""
+    rng = np.random.default_rng([seed, 0xC0, draw])
+    vocab = np.array(_VOCAB)
+    texts = [" ".join(vocab[rng.integers(0, len(vocab),
+                                         int(rng.integers(10, 101)))])
+             for _ in range(n_docs)]
+    for i in sorted(rng.choice(n_docs, n_docs // 20, replace=False)):
+        j = int(rng.integers(0, n_docs - 1))
+        texts[i] = texts[j + (j >= i)] + " dup"
+    langs = rng.choice(len(_LANGS), n_docs, p=_LANG_P)
+    return [{"doc_id": i, "text": t, "lang": _LANGS[k],
+             "source": f"src{i % 20}", "n_chars": len(t)}
+            for i, (t, k) in enumerate(zip(texts, langs))]
 
 
-def gen_corpus(n_docs: int, seed: int) -> list[dict]:
-    """sf-shaped documents (doc_id, text, lang, source, n_chars).  About
-    a quarter are near-duplicates (one or two word edits) of an earlier
-    original, each original copied at most once: with two copies, a
-    copy whose LSH bands miss the original but hit its sibling costs
-    the component search a third round, on some seeds and not others.
-    Stopword density varies per document so the language gate both
-    passes and rejects."""
-    rng = np.random.default_rng([seed, 0xC0])
-    vocab = np.array(_vocabulary())
-    stops = np.array(_STOPWORDS)
-    langs = ("en", "zh", "es", "fr", "de")
-    docs: list[dict] = []
-    bases: list[str] = []  # originals long enough to survive an edit
-    while len(docs) < n_docs:
-        i = len(docs)
-        if bases and rng.random() < 0.25:
-            words = bases.pop(int(rng.integers(0, len(bases)))).split(" ")
-            for _ in range(int(rng.integers(1, 3))):
-                words[int(rng.integers(0, len(words)))] = str(
-                    vocab[rng.integers(0, len(vocab))])
-        else:
-            n = int(rng.integers(3, 100))
-            stop = rng.random(n) < rng.uniform(0.0, 0.3)
-            words = np.where(stop, stops[rng.integers(0, len(stops), n)],
-                             vocab[rng.integers(0, len(vocab), n)]).tolist()
-            if n >= 12:
-                bases.append(" ".join(words))
-        text = " ".join(words)
-        docs.append({"doc_id": i, "text": text,
-                     "lang": langs[int(rng.integers(0, len(langs)))],
-                     "source": f"src{i % 20}", "n_chars": len(text)})
-    return docs
+def bsp_rounds(doc_path: str) -> int:
+    """Rounds ``dedup.dup_components`` (min-label propagation until a
+    round changes nothing) takes over the corpus's DuckDB LSH pairs.
+    The count grows with the longest chain in the pair graph and sets
+    much of the job's cost."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    con = duckdb.connect()
+    try:
+        con.execute("SET enable_progress_bar = false")
+        con.execute("CREATE TABLE documents AS SELECT * FROM "
+                    f"read_parquet('{doc_path}')")
+        ids = [r[0] for r in con.execute(
+            "SELECT doc_id FROM documents").fetchall()]
+        pairs = con.execute(
+            f"SELECT doc_a, doc_b FROM "
+            f"({E.oracle_sql()['dedup_minhash_lsh']})").fetchall()
+    finally:
+        con.close()
+    adj: dict[int, list[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    label = {i: i for i in ids}
+    rounds = 0
+    while True:
+        rounds += 1
+        new = {i: min([label[i]] + [label[j] for j in adj.get(i, ())])
+               for i in ids}
+        if new == label:
+            return rounds
+        label = new
 
 
 def corpus_golden(doc_path: str) -> dict:
@@ -256,7 +285,16 @@ def _write_corpus(out: str, docs: list[dict]) -> str:
 
 
 def _build_corpus(out: str, n_docs: int, seed: int, with_golden: bool):
-    path = _write_corpus(out, gen_corpus(n_docs, seed))
+    """Draw until the corpus needs REF_ROUNDS component rounds, as the
+    reference corpus does: seeds change the content, not the number of
+    rounds the job runs (2-5 between seeds otherwise)."""
+    for draw in range(MAX_DRAWS):
+        path = _write_corpus(out, gen_corpus(n_docs, seed, draw))
+        if not with_golden or bsp_rounds(path) == REF_ROUNDS:
+            break
+    else:
+        raise RuntimeError(f"no corpus with {REF_ROUNDS} rounds in "
+                           f"{MAX_DRAWS} draws for seed {seed}")
     meta = {"docs": n_docs, "images": 0, "media_spans": 0}
     if with_golden:
         golden = corpus_golden(path)
@@ -307,7 +345,7 @@ def prepare(name: str, seed: int, work: str, tiny: bool = False) -> dict:
     tiny variant (fixed seed, no golden) feeds the set-up warm-up."""
     wl = WORKLOADS[name]
     n, tag = (wl["tiny"], "tiny") if tiny else (wl["docs"], str(seed))
-    d = _atomic_dir(os.path.join(work, "inputs", f"{name}-{tag}"),
+    d = _atomic_dir(os.path.join(work, "inputs", f"{name}-{n}-{tag}"),
                     lambda out: wl["build"](out, n, seed, not tiny))
     with open(os.path.join(d, "meta.json")) as f:
         meta = json.load(f)
