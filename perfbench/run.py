@@ -11,8 +11,9 @@ every call's committed output against the golden.  BENCHMARK.json sets
 ``--seconds 1``, so a run is one job launch: set-up and one call.
 ``--trace 1`` instead makes a first, an untraced and a traced job call,
 forces single layers through ``noop`` sinks and times the per-image
-layers in-process, to explain where the job's time goes.  See
-perfbench/README.md.
+layers in-process, to explain where the job's time goes.  Before it
+exits, the run waits for every process it started to end and reaps it.
+See perfbench/README.md.
 
 The last stdout line is one JSON object: correct, attempted, failed,
 metrics.  The line before it carries context that is not a metric
@@ -26,6 +27,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -37,6 +39,7 @@ ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".perfbench_work")
 DRIVER_MEM = "3g"         # fits a 15 GB host; the session default is 48g
 IMAGE_SAMPLE = 24         # images timed per-layer in the traced run
+PR_SET_CHILD_SUBREAPER = 36  # prctl option, <linux/prctl.h>
 
 
 def _nproc() -> int:
@@ -162,8 +165,8 @@ class Bench:
 
     def stop(self) -> None:
         """Stop the session and the JVM (it exits when its stdin
-        closes), then wait until the JVM and every process under it
-        have ended."""
+        closes) and wait for the JVM; its Python workers are waited for
+        with every other descendant by ``end_descendants``."""
         from pyspark import SparkContext
 
         if self.spark is not None:
@@ -172,15 +175,53 @@ class Bench:
         gw = SparkContext._gateway
         if gw is None:
             return
-        tree = [gw.proc.pid] + [p for p, _ in descendants(gw.proc.pid)]
         gw.shutdown()
         gw.proc.stdin.close()
         gw.proc.wait(timeout=60)
         SparkContext._gateway = SparkContext._jvm = None
-        deadline = time.monotonic() + 60
-        while (any(os.path.exists(f"/proc/{p}") for p in tree)
-               and time.monotonic() < deadline):
-            time.sleep(0.1)
+
+
+def adopt_orphans() -> None:
+    """Make this process the reaper of its descendants' orphans: a
+    Python worker whose JVM has exited, or the multiprocessing resource
+    tracker, is re-parented here instead of to init, so the run can
+    wait for it and reap it before it exits."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def end_descendants(timeout: float = 60.0) -> None:
+    """Stop the multiprocessing resource tracker (the spawn pools start
+    one), then wait until every descendant has exited, reaping each;
+    kill whatever is still there after ``timeout`` seconds."""
+    from multiprocessing import resource_tracker
+
+    resource_tracker._resource_tracker._stop()
+    deadline = time.monotonic() + timeout
+    while True:
+        while True:  # reap every child that has exited
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                break
+            if pid == 0:
+                break
+        left = descendants()
+        if not left:
+            return
+        if time.monotonic() > deadline + 10:
+            print(f"processes left running: {left}", file=sys.stderr)
+            return
+        if time.monotonic() > deadline:
+            for pid, _ in left:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
 
 
 def _m(value: float, unit: str) -> dict:
@@ -206,15 +247,7 @@ def run_untraced(b: Bench, seconds: float, context: dict) -> dict:
             "setup_s": _m(setup_s, "s")}
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, required=True)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    args = ap.parse_args()
-
-    _configure_env()
+def run(args, ap: argparse.ArgumentParser) -> int:
     import ocr_pytorch_spark  # noqa: F401  (BLAS core type before numpy)
     from bench import _gemm_anchor
 
@@ -242,6 +275,22 @@ def main() -> int:
     print(json.dumps({"context": context}))
     print(json.dumps(result))
     return 0 if result["correct"] else 1
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seed", type=int, required=True)
+    ap.add_argument("--seconds", type=float, required=True)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    args = ap.parse_args()
+
+    _configure_env()
+    adopt_orphans()
+    try:
+        return run(args, ap)
+    finally:
+        end_descendants()
 
 
 if __name__ == "__main__":
